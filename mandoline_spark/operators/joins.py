@@ -43,10 +43,13 @@ def asof_join(
     q45 rewrite; results identical by the window order argument below:
     the carried ``last()`` at equal ``on`` is the max-``tie_col`` row).
     Rows that tie on BOTH the key and ``tie_col`` break by a unique
-    row id (``_seq2``), so which row's OTHER value columns are carried
-    is a fixed function of the input rather than partition order
-    (ADVICE r15 — without it, callers with value columns beyond
-    ``tie_col`` got a nondeterministic carry on full ties).
+    row id (``_seq2``), so one execution always carries one row's OTHER
+    value columns (ADVICE r15 — without it, callers with value columns
+    beyond ``tie_col`` got an arbitrary mix on full ties).  The id is
+    ``monotonically_increasing_id``, which follows the right input's
+    partition layout, so WHICH of the fully tied rows wins can change
+    with that layout or a task retry; callers that need it fixed by
+    the input alone must make ``tie_col`` unique.
     """
     lcols = left.columns
     rvals = [c for c in right.columns if c not in {on, by}]

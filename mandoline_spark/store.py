@@ -7,7 +7,8 @@ Physical layout (one directory per dataset under a store root):
                                      (content = metadata token JSON)
         index/v=<vid>/var=<name>/g=<gen>/
                                      Parquet: (ckey string,
-                                     c0..c{n-1} int, chunk_hash string).
+                                     c0..c{n-1} int, chunk_hash string,
+                                     wb array<int> cross-writer mask).
                                      A generation is either a FULL
                                      copy-forward index or a DELTA
                                      (only coords one job wrote, marked
@@ -59,12 +60,10 @@ import time
 from dataclasses import dataclass, field
 from typing import Any, Mapping
 
-import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
 from . import fs as fsmod
 from .core import metadata as md
-from .core import slab as sb
 
 # dots allowed INSIDE names, but a name may not BE dots: "." / ".."
 # resolve to the root itself / its parent on path-based backends —
@@ -78,6 +77,37 @@ _NAME_RE = re.compile(r"^(?!\.+$)[A-Za-z0-9_.-]+$")
 # bound exceeded the driver-map cap — delegate to the Spark
 # limit-collect, which decides exactly
 _SPARK_RESOLVE = object()
+
+CHUNK_SCHEMA = T.StructType(
+    [
+        T.StructField("hash", T.StringType(), False),
+        T.StructField("blob", T.BinaryType(), False),
+        T.StructField("nbytes", T.LongType(), False),
+    ]
+)
+
+
+def index_schema(ndim: int) -> T.StructType:
+    fields = [T.StructField("ckey", T.StringType(), False)]
+    fields += [T.StructField(f"c{i}", T.IntegerType(), False) for i in range(ndim)]
+    fields.append(T.StructField("chunk_hash", T.StringType(), False))
+    return T.StructType(fields)
+
+
+def _gen_schema(ndim: int) -> T.StructType:
+    """An index generation as read back: :func:`index_schema`, the
+    cross-writer mask column ``wb``, and the partition columns of its
+    ``v=<vid>/var=<name>/g=<gen>`` directory (declared, so ``v``/``g``
+    are numeric whatever the session's partition type inference)."""
+    return T.StructType(
+        index_schema(ndim).fields
+        + [
+            T.StructField("wb", T.ArrayType(T.IntegerType())),
+            T.StructField("v", T.LongType()),
+            T.StructField("var", T.StringType()),
+            T.StructField("g", T.IntegerType()),
+        ]
+    )
 
 
 def parse_uri(uri: str) -> tuple[str, str, int | None]:
@@ -608,24 +638,34 @@ class Connection:
             os.path.join(self.index_path(version, var, gen), "_DELTA")
         )
 
-    def _maybe_cached(
-        self, key: tuple, path: str, recursive: bool = False
+    def _scan(
+        self,
+        key: tuple,
+        paths: list[str],
+        schema: T.StructType,
+        **options: str,
     ) -> DataFrame:
-        reader = self.spark.read
-        if recursive:
-            # chunk batches land in per-job subdirectories (concurrent
-            # writers cannot share one append's _temporary staging);
-            # recursive lookup reads the whole tree, flat legacy
-            # layouts included
-            reader = reader.option("recursiveFileLookup", "true")
+        """Parquet scan of engine-written ``paths`` under the schema the
+        engine itself wrote.  Declaring it is what keeps relation
+        construction job-free: an inferred read launches one
+        footer-merge Spark job per relation.  Columns a file lacks read
+        as null."""
+
+        def read() -> DataFrame:
+            return (
+                self.spark.read.options(**options)
+                .schema(schema)
+                .parquet(*paths)
+            )
+
         if not self.cache_reads:
-            return reader.parquet(path)
+            return read()
         with self._cache_lock:
             hit = self._df_cache.get(key)
             epoch = self._cache_epoch
         if hit is not None:
             return hit
-        # Build the plain frame OUTSIDE the lock (schema inference
+        # Build the plain frame OUTSIDE the lock (relation construction
         # lists files), but mark it cached only under the lock and only
         # if no invalidation landed mid-construction.  Never .cache()
         # first and unpersist on mismatch: Spark's CacheManager matches
@@ -634,7 +674,7 @@ class Connection:
         # memoized for the same path (r12 review) — and never return a
         # cached-but-unmemoized frame either, which nothing would ever
         # unpersist (r11 ADVICE).
-        plain = reader.parquet(path)
+        plain = read()
         with self._cache_lock:
             if self._cache_epoch == epoch:
                 hit = self._df_cache.get(key)
@@ -648,7 +688,7 @@ class Connection:
         # the bump so the frame sees the post-write file set (r12
         # second review pass: returning `plain` served pre-write data
         # to a reader that provably raced a completed write)
-        return reader.parquet(path)
+        return read()
 
     def invalidate_cache(self) -> None:
         """Drop memoized table DataFrames and driver-side read caches
@@ -665,62 +705,64 @@ class Connection:
 
     # -- driver-side read-through caches -------------------------------------
 
-    def _local_index_plan(
+    def index_plan(
         self, version: int, var: str
     ) -> list[tuple[int, int]] | None:
-        """Generation application order for the resolved (version, var)
-        index — the driver-side mirror of :meth:`resolve_index_df` /
-        :meth:`index_df` (version fallback, newest full + later deltas,
-        delta-only base pulled from the nearest ancestor, recursively).
-        Pure fs metadata: no Spark involvement.  None ⇔ no version has
-        written the variable."""
+        """The resolved (version, var) index as the (version,
+        generation) pairs to overlay, in the order they apply — the one
+        place resolution is decided (Spark resolution, the local
+        pyarrow index map, the writers' bases and layer stacks and
+        ``overlay_depth`` all follow it).  A version that never wrote
+        the variable falls back to the highest *committed* version
+        below it that did (mem.clj:45-49 — a variable not rewritten in
+        a version reads its most recent data; uncommitted versions are
+        invisible, failed_ingest.clj; history is linear, so the
+        committed-ids walk IS the parent chain).  A version's newest
+        FULL generation and every later delta apply; a version holding
+        only deltas takes its base from that fallback's plan,
+        recursively.  Pure fs metadata: no Spark.  None ⇔ no version
+        has written the variable."""
         gens = self.index_gens(version, var)
-        if not gens:
-            for vid in self.version_ids():  # newest first
-                if vid < version and self.index_gens(vid, var):
-                    return self._local_index_plan(vid, var)
-            return None
-        last_full = None
-        for g in gens:
-            if not self.index_gen_is_delta(version, var, g):
-                last_full = g
-        if last_full is not None:
-            return [(version, g) for g in gens if g >= last_full]
-        base: list[tuple[int, int]] = []
+        fulls = [
+            g for g in gens if not self.index_gen_is_delta(version, var, g)
+        ]
+        own = [(version, g) for g in gens if not fulls or g >= fulls[-1]]
+        if fulls:
+            return own
         for vid in self.version_ids():  # newest first
             if vid < version and self.index_gens(vid, var):
-                base = self._local_index_plan(vid, var) or []
-                break
-        return base + [(version, g) for g in gens]
+                return self.index_plan(vid, var) + own
+        return own or None
+
+    def index_footers(self, var: str, plan: list[tuple[int, int]]) -> list:
+        """pyarrow ``ParquetFile`` handles of every generation in
+        ``plan``, in plan order — LOCAL stores only.  Their footer row
+        counts sum to an upper bound on the resolved index size with
+        zero Spark jobs."""
+        import pyarrow.parquet as pq
+
+        files = []
+        for vid, g in plan:
+            d = self.index_path(vid, var, g)
+            for fn in sorted(self.fs.listdir(d)):
+                if fn.endswith(".parquet"):
+                    files.append(pq.ParquetFile(os.path.join(d, fn)))
+        return files
 
     def _local_index_map(self, version: int, var: str, cap: int):
         """Driver-side index resolution for LOCAL stores: read the
         generation parquet files with pyarrow and fold the overlay into
-        a dict — ZERO Spark jobs, no overlay-plan construction (the
-        Spark resolution costs one job plus per-generation relation
-        setup, ~0.3-0.5 s of a cold small read at overlay depth 10).
-        Scale guard rides the parquet FOOTERS: the summed row count of
-        every generation in the plan is an upper bound on the resolved
-        index size, so if it exceeds ``cap`` the answer is delegated to
-        the Spark limit-collect (returns ``_SPARK_RESOLVE``), which
-        decides exactly.  Bytes read stay ≤ the index generations a
-        Spark resolution would scan anyway."""
-        import pyarrow.parquet as pq
-
-        plan = self._local_index_plan(version, var)
+        a dict — ZERO Spark jobs.  Scale guard rides the parquet
+        FOOTERS (:meth:`index_footers`): if their row-count bound
+        exceeds ``cap`` the answer is delegated to the Spark
+        limit-collect (returns ``_SPARK_RESOLVE``), which decides
+        exactly.  Bytes read stay ≤ the index generations a Spark
+        resolution would scan anyway."""
+        plan = self.index_plan(version, var)
         if plan is None:
             return None
-        files: list = []  # ParquetFile handles, plan order
-        total = 0
-        for vid, g in plan:
-            d = self.index_path(vid, var, g)
-            for fn in sorted(self.fs.listdir(d)):
-                if not fn.endswith(".parquet"):
-                    continue
-                pf = pq.ParquetFile(os.path.join(d, fn))
-                total += pf.metadata.num_rows
-                files.append(pf)
-        if total > cap:
+        files = self.index_footers(var, plan)
+        if sum(pf.metadata.num_rows for pf in files) > cap:
             return _SPARK_RESOLVE
         m: dict = {}
         # plan order is application order: later gens overwrite
@@ -872,178 +914,109 @@ class Connection:
         path = self.chunks_path()
         if not _has_parquet(self.fs, path):
             return None
-        return self._maybe_cached(("chunks", path), path, recursive=True)
-
-    def _gen_df(self, version: int, var: str, gen: int) -> DataFrame:
-        return self._maybe_cached(
-            ("index", version, var, gen), self.index_path(version, var, gen)
+        # chunk batches land in per-job subdirectories (concurrent
+        # writers cannot share one append's _temporary staging);
+        # recursive lookup reads the whole tree, flat legacy layouts
+        # included
+        return self._scan(
+            ("chunks", path), [path], CHUNK_SCHEMA,
+            recursiveFileLookup="true",
         )
 
-    @staticmethod
-    def _overlay(base: DataFrame | None, delta: DataFrame) -> DataFrame:
-        """Last-writer-wins merge of a delta onto a base index.  The
-        delta side is O(touched chunks) so the anti-join broadcasts it;
-        the base is never shuffled.  ``allowMissingColumns``: index
-        generations written since the cross-writer mask protocol carry
-        a ``wb`` (written-boxes) column that older generations lack —
-        a mixed-era overlay fills the missing side with null, which is
-        exactly the wholesale semantics an unmasked row has."""
-        if base is None:
-            return delta
-        return delta.unionByName(
-            base.join(F.broadcast(delta.select("ckey")), "ckey", "left_anti"),
-            allowMissingColumns=True,
-        )
+    def gens_df(
+        self, var: str, gens: list[tuple[int, int]], ndim: int
+    ) -> DataFrame:
+        """ONE parquet scan over the (version, generation) directories
+        ``gens`` of ``var``: the writers' index columns plus ``wb`` (a
+        generation written before cross-writer masks lacks it and reads
+        null — wholesale, the semantics an unmasked row has) and the
+        numeric ``v``/``g`` partition columns from the directory
+        names."""
+        return self._scan(
+            ("index", var, tuple(gens)),
+            [self.index_path(v, var, g) for v, g in gens],
+            _gen_schema(ndim),
+            basePath=os.path.join(self.path, "index"),
+        ).drop("var")
 
     @staticmethod
-    def _overlay_stack(
-        base: DataFrame | None, deltas: list[tuple[int, DataFrame]]
-    ) -> DataFrame | None:
-        """Resolve a WHOLE delta chain in one step: the deltas are
-        unioned with their generation number, reduced to one winning
-        row per coordinate (highest generation — last writer wins) by
-        a single aggregation over the O(touched chunks) stack, and the
-        base pays ONE broadcast anti-join against the combined key set.
-
-        Chaining :meth:`_overlay` per delta instead nests one broadcast
-        anti-join PER generation — d broadcast builds per action, and
-        a read path that runs several actions multiplies that again
-        (measured super-linear: 0.9s/3.0s/10.4s slice reads at overlay
-        depth 1/5/10 on the 8,400-chunk perf shape; this shape is flat
-        ~1s at every depth)."""
-        if not deltas:
-            return base
-        if len(deltas) == 1:
-            return Connection._overlay(base, deltas[0][1])
-        stack = None
-        for g, df in deltas:
-            tagged = df.withColumn("_g", F.lit(g))
-            stack = (
-                tagged
-                if stack is None
-                else stack.unionByName(tagged, allowMissingColumns=True)
-            )
-        return Connection._overlay(base, Connection._stack_winner(stack, "_g"))
-
-    @staticmethod
-    def _stack_winner(stack: DataFrame, gen_col: str) -> DataFrame:
-        """One winning row per ckey from a tagged delta stack: highest
-        generation wins (last writer)."""
-        payload = [c for c in stack.columns if c not in ("ckey", gen_col)]
+    def _stack_winner(stack: DataFrame, *order: str) -> DataFrame:
+        """One row per ckey from a generation stack: the one with the
+        highest ``order`` columns (last writer wins)."""
+        payload = [c for c in stack.columns if c != "ckey" and c not in order]
         return (
             stack.groupBy("ckey")
-            .agg(F.max_by(F.struct(*payload), F.col(gen_col)).alias("_w"))
+            .agg(
+                F.max_by(F.struct(*payload), F.struct(*order)).alias("_w")
+            )
             .select("ckey", *[F.col(f"_w.{c}").alias(c) for c in payload])
         )
 
-    def index_df(self, version: int, var: str) -> DataFrame | None:
-        """Resolved index from this version's own generations: the
-        newest full generation overlaid with every later delta.  When
-        the version has only delta generations, the base is pulled from
-        the nearest ancestor version with an index (its own resolution,
-        recursively — compaction keeps these chains short).  None when
-        the version never wrote the variable."""
-        gens = self.index_gens(version, var)
-        if not gens:
-            return None
-        last_full = None
-        for g in gens:
-            if not self.index_gen_is_delta(version, var, g):
-                last_full = g
-        if last_full is not None:
-            base = self._gen_df(version, var, last_full)
-            deltas = [g for g in gens if g > last_full]
-        else:
-            base = None
-            deltas = gens
-        if len(deltas) > 1:
-            # One multi-path scan for the whole delta chain: the g=N
-            # directory names become a partition column via basePath
-            # discovery, so every action pays ONE file listing + footer
-            # pass instead of d separate parquet relations (the
-            # per-relation shape added ~0.3s per delta per read on the
-            # 8,400-chunk perf workload)
-            key = ("index-stack", version, var, tuple(deltas))
-            with self._cache_lock:
-                stack = (
-                    self._df_cache.get(key) if self.cache_reads else None
-                )
-                epoch = self._cache_epoch
-            if stack is None:
-                stack = (
-                    self.spark.read.option(
-                        "basePath", self.index_path(version, var)
-                    ).parquet(
-                        *[
-                            self.index_path(version, var, g)
-                            for g in deltas
-                        ]
-                    )
-                )
-                # the g=N dir names must order NUMERICALLY: partition
-                # type inference normally yields int, but with
-                # partitionColumnTypeInference disabled the column
-                # arrives as string and "10" would lose to "9"
-                stack = stack.withColumn("g", F.col("g").cast("int"))
-                if self.cache_reads:
-                    with self._cache_lock:
-                        # same discipline as _maybe_cached: mark cached
-                        # only under the lock, only on an unchanged
-                        # epoch, and never unpersist a stale same-plan
-                        # frame (plan-keyed CacheManager would drop a
-                        # fresh thread's entry too, r12 review); an
-                        # invalidated-mid-construction frame stays
-                        # plain and uncached (r11 ADVICE)
-                        if self._cache_epoch == epoch:
-                            hit = self._df_cache.get(key)
-                            stack = (
-                                hit
-                                if hit is not None
-                                else self._df_cache.setdefault(
-                                    key, stack.cache()
-                                )
-                            )
-            df = self._overlay(base, self._stack_winner(stack, "g"))
-        else:
-            df = self._overlay_stack(
-                base, [(g, self._gen_df(version, var, g)) for g in deltas]
+    def _index_ndim(self, var: str, plan: list[tuple[int, int]]) -> int:
+        """Coordinate-column count of ``var``'s index, from one part
+        file's footer, read through the Hadoop client without a Spark
+        job: the version metadata that also holds it is not on disk
+        until the version commits, and in-flight versions are resolved
+        too."""
+        v0, g0 = plan[0]
+        d = self.index_path(v0, var, g0)
+        part = next(
+            fn for fn in sorted(self.fs.listdir(d))
+            if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+        )
+        jvm = self.spark._jvm
+        hadoop = jvm.org.apache.parquet.hadoop
+        f = hadoop.ParquetFileReader.open(
+            hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(os.path.join(d, part)),
+                self.spark._jsc.hadoopConfiguration(),
             )
-        if last_full is None:
-            for vid in self.version_ids():  # newest first
-                if vid < version and self.index_gens(vid, var):
-                    anc = self.index_df(vid, var)
-                    if anc is not None:
-                        # df holds only this version's deltas here
-                        df = df.unionByName(
-                            anc.join(
-                                F.broadcast(df.select("ckey")),
-                                "ckey",
-                                "left_anti",
-                            ),
-                            allowMissingColumns=True,
-                        )
-                    break
-        return df
+        )
+        try:
+            fields = f.getFooter().getFileMetaData().getSchema().getFields()
+            return sum(1 for t in fields if re.match(r"^c\d+$", t.getName()))
+        finally:
+            f.close()
+
+    def _plan_df(
+        self, var: str, plan: list[tuple[int, int]] | None
+    ) -> DataFrame | None:
+        """The index an :meth:`index_plan` resolves to, as TWO relations
+        whatever the chain's depth: the base full generation, never
+        shuffled, and one multi-path scan over every delta in the plan,
+        across versions, reduced to one winner per ckey by (v, g).  The
+        winners apply to the base with a single broadcast anti-join —
+        the delta side is O(touched chunks).  A plan that starts with a
+        delta has no base (a delta written with no index below it)."""
+        if plan is None:
+            return None
+        ndim = self._index_ndim(var, plan)
+        base = None
+        v0, g0 = plan[0]
+        if not self.index_gen_is_delta(v0, var, g0):
+            base = self.gens_df(var, plan[:1], ndim).drop("v", "g")
+            plan = plan[1:]
+        if not plan:
+            return base
+        winner = self._stack_winner(self.gens_df(var, plan, ndim), "v", "g")
+        if base is None:
+            return winner
+        return winner.unionByName(
+            base.join(F.broadcast(winner.select("ckey")), "ckey", "left_anti")
+        )
 
     def resolve_index_df(self, version: int, var: str) -> DataFrame | None:
-        """Index for (version, var) with version fallback: the exact
-        version's own index if one exists, else the highest *committed*
-        version ≤ ``version`` that has one (mem.clj:45-49 semantics —
-        a variable not rewritten in a version reads its most recent
-        data; uncommitted versions are invisible, failed_ingest.clj).
-        Because history is linear (commit enforces parent == last) the
-        committed-ids walk IS the parent chain.
+        """Resolved index of (version, var) with version fallback (see
+        :meth:`index_plan`).  None when no version at or below
+        ``version`` wrote the variable."""
+        return self._plan_df(var, self.index_plan(version, var))
 
-        MIRROR: :meth:`_local_index_plan` re-implements this selection
-        driver-side (with :meth:`index_df`'s full/delta/base rules) for
-        the job-free local read tier; a semantics change here must land
-        there too — test_delta_index pins their equivalence."""
-        if self.index_gens(version, var):
-            return self.index_df(version, var)
-        for vid in self.version_ids():  # newest first
-            if vid < version and self.index_gens(vid, var):
-                return self.index_df(vid, var)
-        return None
+    def index_df(self, version: int, var: str) -> DataFrame | None:
+        """:meth:`resolve_index_df` without the fallback: None when this
+        version never wrote the variable."""
+        if not self.index_gens(version, var):
+            return None
+        return self._plan_df(var, self.index_plan(version, var))
 
     def existing_hashes_df(self) -> DataFrame | None:
         c = self.chunks_df()
@@ -1081,8 +1054,3 @@ def _has_parquet(fs, path: str) -> bool:
             return True
     return False
 
-
-def fill_scalar(token: Mapping[str, Any], var: str):
-    """Variable fill value coerced to its numpy dtype."""
-    dtype = sb.as_dtype(md.get_type(token, var))
-    return np.array(md.get_fill(token, var)).astype(dtype)[()]

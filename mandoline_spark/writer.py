@@ -40,7 +40,7 @@ from .core import slice as sl
 from .core.slab import Slab
 from .core.slice import Slice
 from . import fs as fsmod
-from .store import Connection
+from .store import Connection, index_schema
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -83,14 +83,6 @@ def _gen_masked(conn: Connection, vid: int, var: str, gen: int) -> bool:
     return conn.fs.exists(
         os.path.join(conn.index_path(vid, var, gen), "_MASKED")
     )
-
-
-def _norm_wb(df: DataFrame) -> DataFrame:
-    """Ensure the ``wb`` mask column exists (null = wholesale) on an
-    index generation read — pre-mask generations lack it entirely."""
-    if "wb" not in df.columns:
-        df = df.withColumn("wb", F.lit(None).cast(_WB_TYPE))
-    return df
 
 
 def _apply_layers(layers, type_name: str, chunk_slice: Slice, fill) -> Slab:
@@ -143,22 +135,6 @@ def piece_schema(ndim: int) -> T.StructType:
         T.StructField("data", T.BinaryType(), False),
     ]
     return T.StructType(fields)
-
-
-def index_schema(ndim: int) -> T.StructType:
-    fields = [T.StructField("ckey", T.StringType(), False)]
-    fields += [T.StructField(c, T.IntegerType(), False) for c in _coord_cols(ndim)]
-    fields.append(T.StructField("chunk_hash", T.StringType(), False))
-    return T.StructType(fields)
-
-
-CHUNK_SCHEMA = T.StructType(
-    [
-        T.StructField("hash", T.StringType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-        T.StructField("nbytes", T.LongType(), False),
-    ]
-)
 
 
 def slabs_to_piece_rows(
@@ -227,31 +203,23 @@ def _index_rows_bound(
     conn: Connection, version: int, var: str
 ) -> int | None:
     """Upper bound on the resolved (version, var) index row count from
-    parquet FOOTERS — catalog metadata, zero Spark jobs (the same
-    footer walk the local index-map scale guard uses).  The touched
-    base rows are a subset of the resolved index, so a bound within
-    the broadcast budget proves the streamed-scan attach safe without
+    parquet FOOTERS (:meth:`Connection.index_footers`, the local
+    index-map scale guard's walk) — zero Spark jobs.  The touched base
+    rows are a subset of the resolved index, so a bound within the
+    broadcast budget proves the streamed-scan attach safe without
     paying an exact count job.  None when unavailable (non-local fs,
     no index anywhere)."""
     if not isinstance(conn.fs, fsmod.LocalFS):
         return None
-    plan = conn._local_index_plan(version, var)
+    plan = conn.index_plan(version, var)
     if not plan:
         return None
-    import pyarrow.parquet as pq
-
-    total = 0
     try:
-        for v, g in plan:
-            d = conn.index_path(v, var, g)
-            for fn in sorted(conn.fs.listdir(d)):
-                if fn.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(d, fn)
-                    ).metadata.num_rows
+        return sum(
+            pf.metadata.num_rows for pf in conn.index_footers(var, plan)
+        )
     except OSError:
         return None
-    return total
 
 
 def _bcast_budget(conn: Connection) -> int:
@@ -423,7 +391,7 @@ def write_pieces(
     # base genuinely missed it.)
     base_gens = conn.index_gens(vid, var)
     expected_gen = (base_gens[-1] + 1) if base_gens else 0
-    plan = conn._local_index_plan(vid, var) or []
+    plan = conn.index_plan(vid, var) or []
     has_masks = any(_gen_masked(conn, v, var, g) for v, g in plan)
     if has_masks and index_mode == "full":
         # a full-mode commit's copy-forward carry resolves untouched
@@ -433,7 +401,7 @@ def write_pieces(
         reconcile_version(conn, token, variables=[var])
         base_gens = conn.index_gens(vid, var)
         expected_gen = (base_gens[-1] + 1) if base_gens else 0
-        plan = conn._local_index_plan(vid, var) or []
+        plan = conn.index_plan(vid, var) or []
         has_masks = False
     chunks = conn.chunks_df()
 
@@ -528,7 +496,7 @@ def write_pieces(
         # job when plan was empty / chunks was None).
         bound = _index_rows_bound(conn, vid, var)
         layers = _layered_base_grouped(
-            conn, var, plan, agg.select("ckey"), chunks,
+            conn, var, ndim, plan, agg.select("ckey"), chunks,
             n_hint=(
                 bound
                 if bound is not None
@@ -643,6 +611,7 @@ def write_pieces(
 def _layered_base_grouped(
     conn: Connection,
     var: str,
+    ndim: int,
     plan: list[tuple[int, int]],
     touched_ckeys: DataFrame,
     chunks: DataFrame | None,
@@ -660,15 +629,11 @@ def _layered_base_grouped(
     if callable(n_hint):
         n_hint = n_hint()
     stack = None
-    for i, (v, g) in enumerate(plan):
-        df = _norm_wb(conn._gen_df(v, var, g)).select(
+    for i, vg in enumerate(plan):
+        df = conn.gens_df(var, [vg], ndim).select(
             "ckey", "chunk_hash", "wb"
         ).withColumn("_lyr", F.lit(i))
-        stack = (
-            df
-            if stack is None
-            else stack.unionByName(df, allowMissingColumns=True)
-        )
+        stack = df if stack is None else stack.unionByName(df)
     stack = stack.join(touched_ckeys.distinct(), "ckey", "left_semi")
     blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
     if n_hint is not None and n_hint * 1024 <= _bcast_budget(conn):
@@ -826,7 +791,7 @@ def _commit_merged(
         parent = token.get("parent")
         has_base = bool(own_gens) or (
             parent is not None
-            and bool(conn._local_index_plan(parent, var))
+            and bool(conn.index_plan(parent, var))
         )
     gen_path, gen = claim_index_gen(conn, vid, var)
     if index_mode == "full" and gen != expected_gen:
@@ -886,9 +851,7 @@ def _commit_merged(
         carried = base_index.join(
             new_index.select("ckey"), "ckey", "left_anti"
         )
-        new_index = new_index.unionByName(
-            carried, allowMissingColumns=True
-        )
+        new_index = new_index.unionByName(carried)
     if is_delta:
         # the marker goes in BEFORE the parquet append: the generation
         # becomes visible to index_gens the moment part files commit,
@@ -965,9 +928,9 @@ def overlay_depth(conn: Connection, vid: int, var: str) -> int:
     index per version — variable.clj:76-84; the overlay chain is this
     engine's O(touched)-commit extension).  Delegates to the catalog's
     resolution plan so the generation-selection rules live in exactly
-    one place (a hand-rolled mirror here drifted from
-    ``_local_index_plan`` only by luck — r11 review)."""
-    return len(conn._local_index_plan(vid, var) or [])
+    one place (a hand-rolled copy here once agreed with
+    ``index_plan`` only by luck)."""
+    return len(conn.index_plan(vid, var) or [])
 
 
 def materialize_full_index(conn: Connection, vid: int, var: str) -> None:
@@ -1138,17 +1101,13 @@ def _reconcile_var(
     grid = md.get_chunk_grid_slice(token, var)
     grid_tuple = (grid.start, grid.stop, grid.step)
 
-    plan = conn._local_index_plan(vid, var) or []
+    plan = conn.index_plan(vid, var) or []
     stack = None
-    for i, (v, g) in enumerate(plan):
-        df = _norm_wb(conn._gen_df(v, var, g)).select(
+    for i, vg in enumerate(plan):
+        df = conn.gens_df(var, [vg], ndim).select(
             "ckey", *ccols, "chunk_hash", "wb"
         ).withColumn("_lyr", F.lit(i))
-        stack = (
-            df
-            if stack is None
-            else stack.unionByName(df, allowMissingColumns=True)
-        )
+        stack = df if stack is None else stack.unionByName(df)
     if stack is None:
         return
 
@@ -1483,7 +1442,7 @@ def ingest_aligned(
         vid = token["version-id"]
         if any(
             _gen_masked(conn, v, var, g)
-            for v, g in (conn._local_index_plan(vid, var) or [])
+            for v, g in (conn.index_plan(vid, var) or [])
         ):
             # same guard as write_pieces: a full-mode carry over
             # unreconciled cross-writer masks would resolve the
@@ -1533,7 +1492,9 @@ def ingest_aligned(
                     "their whole chunk slice; use write_pieces for "
                     "partial writes"
                 )
-            idx = conn.spark.read.parquet(gen_path)
+            idx = conn.spark.read.schema(index_schema(ndim)).parquet(
+                gen_path
+            )
             dup = (
                 idx.groupBy("ckey")
                 .count()

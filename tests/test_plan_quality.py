@@ -679,9 +679,10 @@ def test_topk_keeps_take_ordered(spark):
 
 
 def test_delta_stack_resolution_is_single_scan(spark, tmp_path):
-    """A multi-delta overlay chain must resolve through ONE multi-path
-    parquet relation + one aggregation — not one scan and one
-    anti-join per generation (the r4 shape, super-linear per read)."""
+    """A multi-delta overlay chain — within one version or across
+    versions — must resolve through ONE multi-path parquet relation +
+    one aggregation — not one scan and one anti-join per generation
+    (the r4 shape, super-linear per read) or per version."""
     import numpy as np
 
     from mandoline_spark import writer
@@ -712,17 +713,32 @@ def test_delta_stack_resolution_is_single_scan(spark, tmp_path):
             index_mode="delta",
         )
     vid = conn.finish_version(t)
-    idx = conn.index_df(vid, "v")
-    text = explain_str(idx)
-    # scan NODES: one for the full base + two references to the ONE
-    # 4-delta stack relation (the winner feeds both union branches of
-    # the final anti-join overlay).  The r4 per-delta chain grew a
-    # scan pair per generation (~9 nodes here).
+    # a chain spanning versions too: two delta-only versions on top
+    for k in range(2):
+        t = conn.add_version(conn.metadata())
+        writer.write_variable(
+            conn,
+            t,
+            "v",
+            [sb.empty("int", sl.mk_slice((4,), (8,)), 20 + k)],
+            index_mode="delta",
+        )
+        top = conn.finish_version(t)
     import re
 
-    nodes = set(re.findall(r"\((\d+)\) Scan parquet", text))
-    assert len(nodes) <= 3, (sorted(nodes), text)
-    assert "max_by" in text, text
+    for v, n_versions in ((vid, 1), (top, 3)):
+        plan = conn.index_plan(v, "v")
+        assert len({pv for pv, _ in plan}) == n_versions, plan
+        text = explain_str(conn.resolve_index_df(v, "v"))
+        # scan NODES: one for the full base + two references to the
+        # ONE multi-path delta relation (the winner feeds both union
+        # branches of the final anti-join overlay), however many
+        # generations and versions the chain crosses.  The r4
+        # per-delta chain grew a scan pair per generation (~9 nodes
+        # here), and the per-version overlay one more per version.
+        nodes = set(re.findall(r"\((\d+)\) Scan parquet", text))
+        assert len(nodes) <= 3, (sorted(nodes), text)
+        assert "max_by" in text, text
 
 
 def test_ranged_is_range_exchange_plus_inpartition_sort(spark):
