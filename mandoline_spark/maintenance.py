@@ -69,6 +69,23 @@ def _retire(
     return True
 
 
+def _retire_chunk_gens(
+    conn: Connection, current: str, stats: dict, retain_seconds: float,
+    now: float,
+) -> None:
+    """:func:`_retire` every chunk-table generation (``chunks``,
+    ``chunks.g<N>``) except the live one at ``current``, counting each
+    in ``stats`` as removed or retained."""
+    live = os.path.basename(current.rstrip("/"))
+    for d in conn.fs.listdir(conn.path):
+        if (d == "chunks" or d.startswith("chunks.g")) and d != live:
+            path = os.path.join(conn.path, d)
+            if _retire(conn.fs, path, retain_seconds, now):
+                stats["chunk_gens_removed"] += 1
+            else:
+                stats["chunk_gens_retained"] += 1
+
+
 def vacuum(
     conn: Connection, retain_seconds: float = 0.0, scope: str = "full"
 ) -> dict:
@@ -333,19 +350,9 @@ def vacuum(
         # pointer flip already happened; only grace-window readers
         # ever touch them, never an in-flight writer, whose dedup
         # semi-join resolves through the CHUNKS pointer).
-        current = os.path.basename(conn.chunks_path().rstrip("/"))
-        for d in conn.fs.listdir(conn.path):
-            if (
-                (d == "chunks" or d.startswith("chunks.g"))
-                and d != current
-            ):
-                if _retire(
-                    conn.fs, os.path.join(conn.path, d),
-                    retain_seconds, now,
-                ):
-                    stats["chunk_gens_removed"] += 1
-                else:
-                    stats["chunk_gens_retained"] += 1
+        _retire_chunk_gens(
+            conn, conn.chunks_path(), stats, retain_seconds, now
+        )
         conn.invalidate_cache()
         return stats
     conn.invalidate_cache()
@@ -393,21 +400,9 @@ def vacuum(
             # generations from EARLIER vacuums still age out and get
             # collected here, otherwise a store that went clean would keep
             # its grace-window directories forever.
-            current = os.path.basename(conn.chunks_path().rstrip("/"))
-            for d in conn.fs.listdir(conn.path):
-                if (
-                    (d == "chunks" or d.startswith("chunks.g"))
-                    and d != current
-                ):
-                    if _retire(
-                        conn.fs,
-                        os.path.join(conn.path, d),
-                        retain_seconds,
-                        now,
-                    ):
-                        stats["chunk_gens_removed"] += 1
-                    else:
-                        stats["chunk_gens_retained"] += 1
+            _retire_chunk_gens(
+                conn, conn.chunks_path(), stats, retain_seconds, now
+            )
             return stats
 
         # Generation flip instead of rename-swap: the survivors are written
@@ -443,15 +438,7 @@ def vacuum(
         conn.fs.replace_text(
             os.path.join(conn.path, "CHUNKS"), f"chunks.g{gen}\n"
         )
-        current = f"chunks.g{gen}"
-        for d in conn.fs.listdir(conn.path):
-            if (d == "chunks" or d.startswith("chunks.g")) and d != current:
-                if _retire(
-                    conn.fs, os.path.join(conn.path, d), retain_seconds, now
-                ):
-                    stats["chunk_gens_removed"] += 1
-                else:
-                    stats["chunk_gens_retained"] += 1
+        _retire_chunk_gens(conn, new_path, stats, retain_seconds, now)
         conn.invalidate_cache()
 
         stats["chunks_kept"] = kept

@@ -11,6 +11,8 @@ value hashes are stable across engines.
 from __future__ import annotations
 
 import os
+import uuid
+import weakref
 from typing import Callable
 
 import pandas as pd
@@ -28,29 +30,40 @@ TABLES = (
 # (file listing + footer schema inference), and every declared query
 # re-resolves 1-4 tables.  A real deployment resolves tables ONCE via
 # the catalog (CREATE TABLE / metastore) — this cache is that catalog
-# for the fixture dirs.  Keyed by session id so a fresh session
-# re-resolves; the fixture files are immutable for a session's life.
-# value keeps a strong ref to the session so a stopped session's id()
-# can never be reused for a different live session
-_LOAD_CACHE: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-# Bounded FIFO: the strong session refs would otherwise pin every
-# stopped session (and its JVM-side state) for the process's life in a
-# harness that creates many sessions/dirs.
+# for the fixture dirs.  Keyed by session (:func:`_session_key`) so a
+# fresh session re-resolves; the fixture files are immutable for a
+# session's life.
+_LOAD_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# Bounded FIFO: each cached DataFrame holds its session, which would
+# otherwise pin every stopped session (and its JVM-side state) for the
+# process's life in a harness that creates many sessions/dirs.
 _LOAD_CACHE_MAX = 256
 
 
+def _session_key(spark) -> str:
+    """Memo key of a session that is never reused: a uuid stamped on
+    the session object.  ``id(spark)`` is recycled once a stopped
+    session is collected, and a new session could then be handed the
+    old one's memoized state (a replay sink, a cached connection)."""
+    key = getattr(spark, "_mandoline_memo_key", None)
+    if key is None:
+        key = uuid.uuid4().hex
+        spark._mandoline_memo_key = key
+    return key
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
+    key = (_session_key(spark), sf_dir, name)
     hit = _LOAD_CACHE.get(key)
     if hit is not None:
-        return hit[1]
+        return hit
     if name == "events":
         df = load_events(spark, sf_dir)
     else:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     while len(_LOAD_CACHE) >= _LOAD_CACHE_MAX:
         _LOAD_CACHE.pop(next(iter(_LOAD_CACHE)))
-    _LOAD_CACHE[key] = (spark, df)
+    _LOAD_CACHE[key] = df
     return df
 
 
@@ -1472,7 +1485,7 @@ def _array_fixture(spark):
     # resolution) exactly once per session instead of per query.  The
     # fixture is immutable after the marker lands, so the memo never
     # serves stale catalog state.
-    key = (id(spark), root)
+    key = (_session_key(spark), root)
     conn = _ARRAY_CONNS.get(key)
     if conn is None:
         conn = store.connect("arr", cache_reads=True)
@@ -2092,7 +2105,7 @@ def q66(spark, sf):
     # reuse for every search — the deployment contract
     # train_ivf_centroids documents.  The memo key is the corpus
     # location; the fixture tables are immutable.
-    key = (id(spark), sf, 8)
+    key = (_session_key(spark), sf, 8)
     cents = _IVF_CENTROIDS.get(key)
     if cents is None:
         cents = _IVF_CENTROIDS[key] = train_ivf_centroids(e, n_cells=8)
@@ -3748,9 +3761,49 @@ def q105(spark, sf):
 # Structured Streaming execution end to end.)
 
 _Q106_MEMO: dict = {}
+# sessions whose replay workspaces already pruned the temp root
+_SWEPT_SESSIONS: "weakref.WeakSet" = weakref.WeakSet()
 
 
-def _replay_workspace(prefix: str) -> str:
+def _proc_start(pid: int) -> str | None:
+    """Start time of process ``pid`` in clock ticks since boot (field 22
+    of ``/proc/<pid>/stat``), or None where unavailable.  With the pid it
+    names one process: a recycled pid starts later."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            stat = f.read()
+    except OSError:
+        return None
+    # the command name (field 2) may hold spaces: count after its ")"
+    return stat.rsplit(")", 1)[1].split()[19]
+
+
+def _owner_alive(d: str) -> bool | None:
+    """Whether the process that stamped replay dir ``d`` still runs:
+    its pid exists and, when ``owner.start`` was stamped, that pid still
+    names a process with the same start time.  None when ``d`` carries
+    no readable stamp (not ours to judge)."""
+    try:
+        with open(os.path.join(d, "owner.pid")) as f:
+            pid = int(f.read().strip())
+    except (OSError, ValueError):
+        return None
+    try:
+        os.kill(pid, 0)  # signal 0: existence probe only
+    except ProcessLookupError:
+        return False
+    except OSError:
+        pass  # alive but not ours (EPERM)
+    try:
+        with open(os.path.join(d, "owner.start")) as f:
+            start = f.read().strip()
+    except OSError:
+        return True  # pid-only stamp: existence is all there is
+    now = _proc_start(pid)
+    return now is None or now == start
+
+
+def _replay_workspace(prefix: str, spark=None) -> str:
     """Session-lifecycle-bounded tempdir for a streaming replay
     (VERDICT r15 #8: the q106-q109 dirs previously lived until
     interpreter ``atexit``, which never runs on SIGKILL and lets a
@@ -3761,14 +3814,17 @@ def _replay_workspace(prefix: str) -> str:
        SparkSession has been stopped (or garbage-collected) and
        rmtree's their dirs — a process that cycles sessions no longer
        accumulates replay sinks for its whole lifetime.
-    2. **Stale-dir pruning**: each dir records its owner pid
-       (``owner.pid``); dirs under the same temp root whose owner is
-       dead are removed at the next replay in ANY process — the
-       SIGKILL/crash leak is collected by the next session instead of
-       surviving until a reboot.
+    2. **Stale-dir pruning**: each dir records its owner (``owner.pid``
+       plus ``owner.start``, the process start time, so a recycled pid
+       does not keep a dead owner's dir alive); dirs under the same
+       temp root whose owner is dead are removed by the next session
+       that replays, in ANY process — the SIGKILL/crash leak is
+       collected by the next session instead of surviving until a
+       reboot.  The temp root is listed once per ``spark`` session
+       (every call when no session is given).
     3. **atexit** stays as the in-process backstop for the live dirs.
 
-    Returns the created tempdir path (with ``owner.pid`` stamped)."""
+    Returns the created tempdir path (with the owner stamped)."""
     import atexit as _atexit
     import shutil as _shutil
     import tempfile as _tempfile
@@ -3789,39 +3845,34 @@ def _replay_workspace(prefix: str) -> str:
 
     # 2. prune same-prefix-family dirs abandoned by dead processes
     troot = _tempfile.gettempdir()
-    try:
-        names = os.listdir(troot)
-    except OSError:
-        names = []
-    for name in names:
-        if not name.startswith("mandoline_q1"):
-            continue
-        d = os.path.join(troot, name)
-        pid_file = os.path.join(d, "owner.pid")
+    if spark is None or spark not in _SWEPT_SESSIONS:
         try:
-            with open(pid_file) as f:
-                pid = int(f.read().strip())
-        except (OSError, ValueError):
-            continue  # no/unreadable stamp: not ours to judge, skip
-        if pid == os.getpid():
-            continue
-        try:
-            os.kill(pid, 0)  # signal 0: existence probe only
-        except ProcessLookupError:
-            _shutil.rmtree(d, ignore_errors=True)
+            names = os.listdir(troot)
         except OSError:
-            continue  # alive but not ours (EPERM) — leave it
+            names = []
+        for name in names:
+            d = os.path.join(troot, name)
+            if name.startswith("mandoline_q1") and _owner_alive(d) is False:
+                _shutil.rmtree(d, ignore_errors=True)
+        if spark is not None:
+            _SWEPT_SESSIONS.add(spark)
 
     # 3. create this replay's dir, stamped, with the atexit backstop
     tmp = _tempfile.mkdtemp(prefix=prefix)
     with open(os.path.join(tmp, "owner.pid"), "w") as f:
         f.write(str(os.getpid()))
+    start = _proc_start(os.getpid())
+    if start is not None:
+        with open(os.path.join(tmp, "owner.start"), "w") as f:
+            f.write(start)
     _atexit.register(_shutil.rmtree, tmp, ignore_errors=True)
     return tmp
 
 
 def _replay_result(spark, key):
-    """Memoized replay sink as a DataFrame, or None on memo miss.  The
+    """Memoized replay sink as a DataFrame, or None on memo miss.  An
+    entry whose sink directory is gone (removed by a sweep or by hand)
+    is dropped and counts as a miss, so the caller replays again.  The
     batch read passes the EXPLICIT sink schema captured at replay time:
     a replay whose every row was dropped (e.g. all late data) commits
     zero data files, and a schema-inferring read of that sink raises
@@ -3830,6 +3881,9 @@ def _replay_result(spark, key):
     DataFrame of the right shape."""
     ent = _Q106_MEMO.get(key)
     if ent is None:
+        return None
+    if not os.path.isdir(ent["out"]):
+        del _Q106_MEMO[key]
         return None
     return spark.read.schema(ent["schema"]).parquet(ent["out"])
 
@@ -3892,7 +3946,7 @@ def q106(spark, sf):
         session_counts,
     )
 
-    key = (id(spark), _os.path.abspath(sf))
+    key = (_session_key(spark), _os.path.abspath(sf))
     result = _replay_result(spark, key)
     if result is None:
         # the dir holds the replay source AND the parquet sink for the
@@ -3903,7 +3957,7 @@ def q106(spark, sf):
         # every finalized session in the DRIVER heap for the session
         # lifetime and re-shipped them per scan — see
         # run_available_now_to_parquet's docstring.
-        tmp = _replay_workspace("mandoline_q106_")
+        tmp = _replay_workspace("mandoline_q106_", spark)
         src = _os.path.join(tmp, "src")
         # round the fixture's TIMESTAMP(NANOS) through one Spark
         # write so the stream source reads Spark-native micros
@@ -3976,11 +4030,11 @@ def q107(spark, sf):
         session_counts,
     )
 
-    key = (id(spark), _os.path.abspath(sf), "multibatch")
+    key = (_session_key(spark), _os.path.abspath(sf), "multibatch")
     result = _replay_result(spark, key)
     if result is None:
         # parquet sink + lifecycle-bounded dir, q106's rationale
-        tmp = _replay_workspace("mandoline_q107_")
+        tmp = _replay_workspace("mandoline_q107_", spark)
         src = _os.path.join(tmp, "src")
         # one range exchange: part-0000i holds the i-th event-time
         # range (contiguous, non-overlapping); the write also
@@ -4064,13 +4118,13 @@ def q108(spark, sf):
 
     from .streaming.ops import dedup_stream, run_available_now_to_parquet
 
-    key = (id(spark), _os.path.abspath(sf), "dedup_gate")
+    key = (_session_key(spark), _os.path.abspath(sf), "dedup_gate")
     result = _replay_result(spark, key)
     if result is None:
         # parquet sink + lifecycle-bounded dir, q106's rationale — for
         # THIS replay the memory sink was the worst of the four: the
         # admitted rows carry the full document text
-        tmp = _replay_workspace("mandoline_q108_")
+        tmp = _replay_workspace("mandoline_q108_", spark)
         src = _os.path.join(tmp, "src")
         docs = load(spark, sf, "documents").select("doc_id", "text")
         (
@@ -4161,11 +4215,11 @@ def q109(spark, sf):
         run_available_now_to_parquet,
     )
 
-    key = (id(spark), _os.path.abspath(sf), "interval_join")
+    key = (_session_key(spark), _os.path.abspath(sf), "interval_join")
     result = _replay_result(spark, key)
     if result is None:
         # parquet sink + lifecycle-bounded dir, q106's rationale
-        tmp = _replay_workspace("mandoline_q109_")
+        tmp = _replay_workspace("mandoline_q109_", spark)
         src = _os.path.join(tmp, "src")
         (
             load_events(spark, sf)

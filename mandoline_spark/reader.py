@@ -127,31 +127,10 @@ def _join_blobs(
     autoBroadcastJoinThreshold, so the bound must live here — ADVICE
     r4: the old flat 4M-row cutoff allowed multi-hundred-MB relations
     onto small drivers); those fall back to statistics, and at that
-    scale the chunk table is far past any broadcast threshold anyway."""
+    scale the chunk table is far past any broadcast threshold anyway
+    (:meth:`Connection.fits_broadcast` owns the budget)."""
     n_coords, _ = _touched_chunks(token, var, request)
-    # Bytes per built hash-relation row, MEASURED rather than modeled
-    # (ADVICE r5 asked for a sanity check of the old 4x-overhead
-    # formula): the BroadcastExchangeExec dataSize metric for a real
-    # 8,400-row 3-d pruned-index broadcast reports 8.65 MB ≈ 1030
-    # bytes/row — the old formula's 256-272 UNDERestimated the built
-    # relation ~4x, so its 256 MB "budget" actually admitted ~1 GB
-    # relations.  1 KiB/row is the honest figure (UnsafeRow + hash-map
-    # arrays dominate the 64-byte payload; ndim barely moves it).  The
-    # byte budget is configurable per session
-    # (spark.mandoline.broadcastIndexBudget, bytes): constrained
-    # drivers shrink it, and the bimodal-regression workloads the hint
-    # exists for can widen it explicitly instead of silently riding an
-    # optimistic estimate.
-    est_row_bytes = 1024
-    try:
-        budget = int(
-            conn.spark.conf.get(
-                "spark.mandoline.broadcastIndexBudget", str(256 << 20)
-            )
-        )
-    except ValueError:
-        budget = 256 << 20
-    if n_coords * est_row_bytes <= budget:
+    if conn.fits_broadcast(n_coords):
         idx = F.broadcast(idx)
     return idx.join(chunks, idx.chunk_hash == chunks.hash, "inner")
 

@@ -71,8 +71,22 @@ def _default_driver_mem(
     return f"{max(4, min(12, avail_gb // 4))}g"
 
 
+def _default_cpus() -> str:
+    """``local[N]`` core count: ``SPARK_GRAFT_CPUS`` when set, else the
+    CPUs this process may run on — its affinity mask, which a
+    container's cpuset narrows (``os.cpu_count()`` where the platform
+    has no affinity call)."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    if env:
+        return env
+    try:
+        return str(len(os.sched_getaffinity(0)))
+    except AttributeError:
+        return str(os.cpu_count() or 1)
+
+
 def get_spark(app_name: str = "mandoline_spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -703,6 +703,30 @@ class Connection:
         for df in dropped:  # Spark call outside the lock
             df.unpersist()
 
+    def fits_broadcast(self, n_rows: int) -> bool:
+        """True when a blob-free hash relation of ``n_rows`` rows (index
+        rows: coordinates + hash) may be broadcast: its built size fits
+        the session's byte budget ``spark.mandoline.broadcastIndexBudget``
+        (default 256 MiB; a value that does not parse reads as the
+        default).  An explicit broadcast bypasses
+        ``autoBroadcastJoinThreshold``, so every hinted broadcast of
+        index rows asks here.  Bytes per built row are MEASURED, not
+        modeled: the BroadcastExchangeExec dataSize metric of a real
+        8,400-row 3-d pruned-index broadcast reports 8.65 MB ≈ 1030
+        bytes/row (UnsafeRow + hash-map arrays dominate the 64-byte
+        payload; ndim barely moves it) — a 4x-overhead formula
+        UNDERestimated it ~4x and admitted ~1 GB relations under a
+        "256 MB" budget."""
+        try:
+            budget = int(
+                self.spark.conf.get(
+                    "spark.mandoline.broadcastIndexBudget", str(256 << 20)
+                )
+            )
+        except ValueError:
+            budget = 256 << 20
+        return n_rows * 1024 <= budget
+
     # -- driver-side read-through caches -------------------------------------
 
     def index_plan(
@@ -939,19 +963,6 @@ class Connection:
             basePath=os.path.join(self.path, "index"),
         ).drop("var")
 
-    @staticmethod
-    def _stack_winner(stack: DataFrame, *order: str) -> DataFrame:
-        """One row per ckey from a generation stack: the one with the
-        highest ``order`` columns (last writer wins)."""
-        payload = [c for c in stack.columns if c != "ckey" and c not in order]
-        return (
-            stack.groupBy("ckey")
-            .agg(
-                F.max_by(F.struct(*payload), F.struct(*order)).alias("_w")
-            )
-            .select("ckey", *[F.col(f"_w.{c}").alias(c) for c in payload])
-        )
-
     def _index_ndim(self, var: str, plan: list[tuple[int, int]]) -> int:
         """Coordinate-column count of ``var``'s index, from one part
         file's footer, read through the Hadoop client without a Spark
@@ -978,7 +989,7 @@ class Connection:
         finally:
             f.close()
 
-    def _plan_df(
+    def plan_df(
         self, var: str, plan: list[tuple[int, int]] | None
     ) -> DataFrame | None:
         """The index an :meth:`index_plan` resolves to, as TWO relations
@@ -998,7 +1009,13 @@ class Connection:
             plan = plan[1:]
         if not plan:
             return base
-        winner = self._stack_winner(self.gens_df(var, plan, ndim), "v", "g")
+        deltas = self.gens_df(var, plan, ndim)
+        payload = [c for c in deltas.columns if c not in ("ckey", "v", "g")]
+        winner = (
+            deltas.groupBy("ckey")
+            .agg(F.max_by(F.struct(*payload), F.struct("v", "g")).alias("_w"))
+            .select("ckey", *[F.col(f"_w.{c}").alias(c) for c in payload])
+        )
         if base is None:
             return winner
         return winner.unionByName(
@@ -1009,14 +1026,14 @@ class Connection:
         """Resolved index of (version, var) with version fallback (see
         :meth:`index_plan`).  None when no version at or below
         ``version`` wrote the variable."""
-        return self._plan_df(var, self.index_plan(version, var))
+        return self.plan_df(var, self.index_plan(version, var))
 
     def index_df(self, version: int, var: str) -> DataFrame | None:
         """:meth:`resolve_index_df` without the fallback: None when this
         version never wrote the variable."""
         if not self.index_gens(version, var):
             return None
-        return self._plan_df(var, self.index_plan(version, var))
+        return self.plan_df(var, self.index_plan(version, var))
 
     def existing_hashes_df(self) -> DataFrame | None:
         c = self.chunks_df()

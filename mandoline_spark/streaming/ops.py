@@ -512,8 +512,8 @@ def stream_ingest(
     replays the full distributed write path (merge → hash → dedup →
     index append).  ``index_mode="delta"`` keeps each commit
     O(batch-touched chunks) — the right default for an unbounded stream
-    of small writes; run ``maintenance.compact_index`` on a schedule to
-    bound the read-time overlay chain.
+    of small writes; ``compact_every`` (below) bounds the read-time
+    overlay chain.
 
     Exactly-once: ``foreachBatch`` is at-least-once under retries, so a
     per-batch marker file (``_ingest_batches/<id>``) makes the
@@ -528,10 +528,13 @@ def stream_ingest(
     the ``DataStreamWriter`` (callers pick the trigger and call
     ``start()``).
 
-    ``compact_every=N`` re-materializes a full index generation after
-    every Nth committed version (the stream's single driver is the
-    single-maintainer compaction needs), so the read-time delta-overlay
-    chain stays ≤ N deep no matter how long the stream runs.
+    ``compact_every=N`` is the write path's auto-compaction trigger
+    (see :func:`mandoline_spark.writer.write_variable`): once a batch's
+    delta write leaves a read of its version scanning N generation
+    directories, the write re-materializes a full index generation
+    before the version commits, so the overlay chain stays shorter than
+    N however long the stream runs (``None`` = session conf
+    ``spark.mandoline.compactEvery``, default 16; 0 disables).
     """
     import os
 
@@ -557,13 +560,12 @@ def stream_ingest(
             return
         token = conn.add_version(spec)
         token["batch-id"] = batch_id
-        _writer.write_pieces(conn, token, var, batch_df, index_mode=index_mode)
+        _writer.write_pieces(
+            conn, token, var, batch_df,
+            index_mode=index_mode, compact_every=compact_every,
+        )
         conn.finish_version(token)
         conn.fs.write_text(marker, str(token["version-id"]))
-        if compact_every and len(conn.version_ids()) % compact_every == 0:
-            from ..maintenance import compact_index
-
-            compact_index(conn, var=var)
 
     return (
         pieces.writeStream.foreachBatch(handle)

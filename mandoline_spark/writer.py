@@ -182,102 +182,112 @@ def slabs_to_piece_rows(
     return rows
 
 
-def _base_index_df(
-    conn: Connection, token: Mapping[str, Any], var: str
-) -> DataFrame | None:
-    """Base for read-modify-write: this in-flight version's own index if
-    a prior write job left one, else the nearest committed ancestor's
-    (impl.clj:232-244 precedence + the mem.clj:45-49 version fallback —
-    the parent version itself may never have written this variable)."""
+def _write_base(
+    conn: Connection, token: Mapping[str, Any], var: str, index_mode: str
+) -> tuple[int, list[tuple[int, int]], bool]:
+    """Snapshot the index a write builds on: (expected generation, index
+    plan, whether a generation in the plan carries cross-writer masks).
+    The generations are listed BEFORE the plan: the claim number the
+    commit later draws is compared against this snapshot to detect a
+    concurrent writer, so a generation landing in between reads as
+    concurrent instead of as covered by a base that missed it (a
+    snapshot taken at commit left a TOCTOU window where a generation
+    committed during the merge job made expected == claimed).
+
+    A full-mode write over masked state reconciles first: its
+    copy-forward carry resolves untouched coords wholesale (winner hash
+    per ckey) and would bake the masked layers' loss into the new full
+    generation; after the merge the carry reads a clean base."""
     vid = token["version-id"]
-    own = conn.index_df(vid, var)
-    if own is not None:
-        return own
-    parent = token.get("parent")
-    if parent is not None:
-        return conn.resolve_index_df(parent, var)
-    return None
+    gens = conn.index_gens(vid, var)
+    plan = conn.index_plan(vid, var) or []
+    masked = any(_gen_masked(conn, v, var, g) for v, g in plan)
+    if masked and index_mode == "full":
+        reconcile_version(conn, token, variables=[var])
+        gens = conn.index_gens(vid, var)
+        plan = conn.index_plan(vid, var) or []
+        masked = False
+    return ((gens[-1] + 1) if gens else 0), plan, masked
 
 
-def _index_rows_bound(
-    conn: Connection, version: int, var: str
-) -> int | None:
-    """Upper bound on the resolved (version, var) index row count from
-    parquet FOOTERS (:meth:`Connection.index_footers`, the local
-    index-map scale guard's walk) — zero Spark jobs.  The touched base
-    rows are a subset of the resolved index, so a bound within the
-    broadcast budget proves the streamed-scan attach safe without
-    paying an exact count job.  None when unavailable (non-local fs,
-    no index anywhere)."""
-    if not isinstance(conn.fs, fsmod.LocalFS):
-        return None
-    plan = conn.index_plan(version, var)
-    if not plan:
-        return None
-    try:
-        return sum(
-            pf.metadata.num_rows for pf in conn.index_footers(var, plan)
-        )
-    except OSError:
-        return None
-
-
-def _bcast_budget(conn: Connection) -> int:
-    """Session broadcast budget in bytes
-    (``spark.mandoline.broadcastIndexBudget``; shared convention with
-    reader._join_blobs — an explicit broadcast bypasses
-    autoBroadcastJoinThreshold, so the bound must live with the
-    hint)."""
-    try:
-        return int(
-            conn.spark.conf.get(
-                "spark.mandoline.broadcastIndexBudget", str(256 << 20)
-            )
-        )
-    except ValueError:
-        return 256 << 20
-
-
-def _touched_base_blobs(
+def _touched_layers(
     conn: Connection,
-    chunks: DataFrame,
-    base_rows: DataFrame,
-    n_rows: int,
-) -> DataFrame:
-    """(ckey, _base) blob attachment for the touched base-index rows
-    ``base_rows`` (columns: ckey, _bhash), with the chunk table
-    STREAMED rather than exchanged: within the session's broadcast
-    budget (``spark.mandoline.broadcastIndexBudget``, the read path's
-    measured ~1 KiB-per-built-row convention — reader._join_blobs) the
-    wanted-hash set and then the touched rows broadcast, so the only
-    blob bytes that cross an exchange are the touched chunks' own.
-    Before this, the read-modify-write attach shuffle-hash-joined the
-    ENTIRE chunk table per write job — a one-chunk partial write into
-    a petabyte store shuffled every blob (r11 review).  Past the
-    budget (a write touching >~256k chunks): the shuffled-hash
-    fallback, which keeps blob hash maps partition-sized — never
-    broadcast the BLOB side; its on-disk size is the zstd-compressed
-    footprint, and a "small" broadcast would materialize the
-    decompressed blobs in one driver-built relation."""
-    blob_src = chunks.select(
-        F.col("hash").alias("_bhash"), F.col("blob").alias("_base")
-    )
-    # ~1 KiB per built hash-relation row, the read path's measured
-    # convention (reader._join_blobs)
-    if n_rows * 1024 <= _bcast_budget(conn):
-        # one broadcast does prune AND attach: the streamed chunk scan
-        # probes the touched-rows hash relation, non-matching blobs
-        # never leave their scan task, matching ones pick up their
-        # ckey(s) in place.  inner: a base hash missing from the chunk
-        # store resolves to no row, and the caller's left join yields a
-        # null base — the same fill-base semantics the old left join
-        # produced
-        return blob_src.join(
-            F.broadcast(base_rows), "_bhash", "inner"
-        ).select("ckey", "_base")
-    return base_rows.join(
-        blob_src.hint("shuffle_hash"), "_bhash", "left"
-    ).select("ckey", "_base")
+    var: str,
+    ndim: int,
+    plan: list[tuple[int, int]],
+    touched: DataFrame,
+    count: Callable[[], int],
+    stack: bool,
+) -> DataFrame | None:
+    """(ckey, _layers) for the chunks named in ``touched`` (a ckey
+    column): the index layers the merge kernel folds under them, each a
+    (lyr, wb, blob) struct.  ``stack=False`` attaches ONE wholesale
+    layer, the resolved winner of ``plan`` (impl.clj:232-244 base
+    precedence with the mem.clj:45-49 version fallback);
+    ``stack=True`` attaches every generation's row in ``plan`` with its
+    mask, ``lyr`` in application order — the shape a chunk needs while
+    a concurrent writer's cells still live in a lower layer.  None when
+    there is nothing to attach (empty plan, no chunk table).
+
+    Blobs attach with the chunk table STREAMED, never exchanged: the
+    touched index rows (blob-free) broadcast, the chunk scan probes
+    them, and only matching blobs leave their scan task — a one-chunk
+    write into a petabyte store moves one blob (a shuffle join here
+    once exchanged the whole chunk table per write job).  A base hash
+    missing from the chunk table resolves to no layer: the chunk merges
+    onto fill.  The broadcast is sized by the generations' parquet
+    FOOTER row counts (zero jobs, local stores) and, when those do not
+    settle it, by ``count()`` touched chunks times the layers each may
+    carry.  Past :meth:`Connection.fits_broadcast` the join is a
+    shuffled hash join whose build side is the partition-sized blob
+    side — never broadcast the BLOB side: its on-disk size is the
+    zstd-compressed footprint, and a "small" broadcast would
+    materialize the decompressed blobs in one driver-built relation."""
+    chunks = conn.chunks_df()
+    if not plan or chunks is None:
+        return None
+    if stack:
+        # one scan over the plan's generations; a row's layer number is
+        # its generation's position in the plan
+        order = F.array(*[F.lit(f"{v}/{g}") for v, g in plan])
+        vg = F.concat_ws(
+            "/", F.col("v").cast("string"), F.col("g").cast("string")
+        )
+        rows = conn.gens_df(var, plan, ndim).select(
+            "ckey",
+            "chunk_hash",
+            "wb",
+            F.array_position(order, vg).cast("int").alias("lyr"),
+        )
+    else:
+        rows = conn.plan_df(var, plan).select(
+            "ckey",
+            "chunk_hash",
+            F.lit(None).cast(_WB_TYPE).alias("wb"),
+            F.lit(0).alias("lyr"),
+        )
+    rows = rows.join(touched, "ckey", "left_semi")
+    n_rows = None
+    if isinstance(conn.fs, fsmod.LocalFS):
+        try:
+            n_rows = sum(
+                pf.metadata.num_rows for pf in conn.index_footers(var, plan)
+            )
+        except OSError:
+            pass
+    if n_rows is None or not conn.fits_broadcast(n_rows):
+        n_rows = count() * (len(plan) if stack else 1)
+    blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
+    if conn.fits_broadcast(n_rows):
+        blobbed = blob_src.join(F.broadcast(rows), "chunk_hash", "inner")
+    else:
+        blobbed = rows.join(
+            blob_src.hint("shuffle_hash"), "chunk_hash", "inner"
+        )
+    layer = F.struct("lyr", "wb", "blob")
+    if not stack:
+        return blobbed.select("ckey", F.array(layer).alias("_layers"))
+    return blobbed.groupBy("ckey").agg(F.collect_list(layer).alias("_layers"))
 
 
 def _slabs_are_aligned(
@@ -373,57 +383,22 @@ def write_pieces(
     """
     if index_mode not in ("full", "delta"):
         raise ValueError(f"index_mode must be 'full' or 'delta': {index_mode!r}")
-    spark = conn.spark
-    vid = token["version-id"]
     ndim = len(md.get_variable_dimensions(token, var))
     ccols = _coord_cols(ndim)
-    type_name = md.get_type(token, var)
-    fill = md.get_fill(token, var)
     grid = md.get_chunk_grid_slice(token, var)
-    grid_tuple = (grid.start, grid.stop, grid.step)
-
-    # Snapshot the generations visible at BASE-READ time: the claim
-    # number this job later draws is compared against this snapshot to
-    # detect a concurrent writer.  (Claimed != expected ⇔ a generation
-    # this job's base CANNOT contain landed in between — snapshotting
-    # later, at commit, left a TOCTOU window where a generation
-    # committed during the merge job made expected == claimed while the
-    # base genuinely missed it.)
-    base_gens = conn.index_gens(vid, var)
-    expected_gen = (base_gens[-1] + 1) if base_gens else 0
-    plan = conn.index_plan(vid, var) or []
-    has_masks = any(_gen_masked(conn, v, var, g) for v, g in plan)
-    if has_masks and index_mode == "full":
-        # a full-mode commit's copy-forward carry resolves untouched
-        # coords wholesale (winner hash per ckey) — it would bake the
-        # masked layers' loss into the new full generation.  Merge the
-        # masked state first; the carry then reads a clean base.
-        reconcile_version(conn, token, variables=[var])
-        base_gens = conn.index_gens(vid, var)
-        expected_gen = (base_gens[-1] + 1) if base_gens else 0
-        plan = conn.index_plan(vid, var) or []
-        has_masks = False
-    chunks = conn.chunks_df()
-
-    out_schema = T.StructType(
-        list(index_schema(ndim).fields)
-        + [
-            T.StructField("blob", T.BinaryType(), False),
-            T.StructField("nbytes", T.LongType(), False),
-        ]
-    )
+    expected_gen, plan, has_masks = _write_base(conn, token, var, index_mode)
 
     # One shuffle groups each chunk's pieces; the pieces arrive as a
     # sorted struct array (sort_array orders by ord first — ties are
     # broken deterministically by piece position, where the reference's
     # thread pool left them unordered).  The groupBy keys on ckey ALONE
     # (the coordinate columns are a pure function of it, carried
-    # through first()): the downstream base/layer joins are on ckey,
-    # and keying the agg the same way lets its HashPartitioning satisfy
+    # through first()): the downstream layer join is on ckey, and
+    # keying the agg the same way lets its HashPartitioning satisfy
     # the join requirement — no second exchange of the piece bytes.
-    # The agg is persisted BEFORE any join derives from it: the base/
-    # layer attachments semi-join its ckeys, so an unpersisted agg
-    # appears twice in the joined plan and the piece shuffle runs twice.
+    # The agg is persisted BEFORE any join derives from it: the layer
+    # attachment semi-joins its ckeys, so an unpersisted agg appears
+    # twice in the joined plan and the piece shuffle runs twice.
     caches: list = []  # frames persisted by this call, dropped in the finally
     agg = pieces.groupBy("ckey").agg(
         *[F.first(c).alias(c) for c in ccols],
@@ -432,89 +407,29 @@ def write_pieces(
         ).alias("_ps"),
     ).persist()
     caches.append(agg)
-    if not has_masks:
-        base_index = _base_index_df(conn, token, var)
-        if base_index is not None and chunks is not None:
-            # Base blobs attach per CHUNK, after the piece shuffle: the
-            # old per-piece attach shipped each chunk's base blob once
-            # per piece through the groupBy exchange, and its blob join
-            # exchanged the ENTIRE chunk table per write job (r11
-            # review) — a one-chunk partial write into a petabyte store
-            # paid a full-table blob shuffle.  The touched-ckey
-            # semi-join plus _touched_base_blobs keep blob movement
-            # O(touched).  The count is one job over the persisted agg
-            # and front-loads the piece pipeline it would pay anyway.
-            base_rows = base_index.select(
-                "ckey", F.col("chunk_hash").alias("_bhash")
-            ).join(agg.select("ckey"), "ckey", "left_semi")
-            # size the broadcast decision from footer metadata when the
-            # bound already fits the budget (zero jobs — the common
-            # small-store / test / bench shape); only an inconclusive
-            # bound pays the exact count over the persisted agg
-            bound = _index_rows_bound(conn, vid, var)
-            n_rows = (
-                bound
-                if bound is not None
-                and bound * 1024 <= _bcast_budget(conn)
-                else agg.count()
-            )
-            based = _touched_base_blobs(
-                conn, chunks, base_rows, n_rows
-            ).persist()
-            caches.append(based)
-            grouped = agg.join(based, "ckey", "left")
-        else:
-            grouped = agg.withColumn("_base", F.lit(None).cast("binary"))
-        # normalize the base to the layered representation the merge
-        # kernel consumes: one wholesale layer (the resolved winner
-        # blob).  agg and based are both cached, so the join replays
-        # cheaply per action — the joined frame needs no third persist.
-        grouped = grouped.withColumn(
+    # Base layers attach per CHUNK, after the piece shuffle (a per-piece
+    # attach shipped each base blob once per piece through the groupBy
+    # exchange).  A masked base attaches the whole live layer stack:
+    # its resolved winner blob is NOT the chunk's full content (the
+    # transient pre-reconcile shape; committed versions never show it).
+    # agg.count is one job over the persisted agg, paid only when the
+    # footer bound does not settle the broadcast.
+    layers = _touched_layers(
+        conn, var, ndim, plan, agg.select("ckey"), agg.count, has_masks
+    )
+    if layers is None:
+        grouped = agg.withColumn(
             "_layers",
-            F.when(
-                F.col("_base").isNotNull(),
-                F.array(
-                    F.struct(
-                        F.lit(0).alias("lyr"),
-                        F.lit(None).cast(_WB_TYPE).alias("wb"),
-                        F.col("_base").alias("blob"),
-                    )
-                ),
-            ),
-        ).drop("_base")
-    else:
-        # masked base: the resolved winner blob is NOT the chunk's full
-        # content (a concurrent writer's cells live in a lower layer) —
-        # attach the whole live layer stack per touched chunk and let
-        # the merge kernel fold it (the transient pre-reconcile shape;
-        # reads of committed versions never see it)
-        # n_hint sizes the broadcast-prune decision.  Prefer the
-        # zero-job footer bound (same shortcut as the unmasked branch);
-        # fall back to a LAZY exact count so the job only runs after
-        # _layered_base_grouped has confirmed there is a stack to
-        # attach at all (r11 ADVICE: the eager count paid a discarded
-        # job when plan was empty / chunks was None).
-        bound = _index_rows_bound(conn, vid, var)
-        layers = _layered_base_grouped(
-            conn, var, ndim, plan, agg.select("ckey"), chunks,
-            n_hint=(
-                bound
-                if bound is not None
-                and bound * 1024 <= _bcast_budget(conn)
-                else (lambda: agg.count() * max(1, len(plan)))
+            F.lit(None).cast(
+                f"array<struct<lyr:int,wb:{_WB_TYPE},blob:binary>>"
             ),
         )
-        if layers is not None:
-            grouped = agg.join(layers, "ckey", "left")
-        else:
-            grouped = agg.withColumn(
-                "_layers",
-                F.lit(None).cast(
-                    f"array<struct<lyr:int,wb:{_WB_TYPE},blob:binary>>"
-                ),
-            )
-        grouped = grouped.persist()
-        caches.append(grouped)
+    else:
+        # agg and layers are both cached, so the join replays cheaply
+        # per action — the joined frame needs no third persist
+        layers = layers.persist()
+        caches.append(layers)
+        grouped = agg.join(layers, "ckey", "left")
 
     # Bulk-ingest fast path, all JVM: a chunk written by exactly one
     # piece covering the whole (uncropped) chunk slice with no base to
@@ -525,7 +440,7 @@ def write_pieces(
     p0 = F.col("_ps")[0]
     full_cover = F.lit(True)
     for i in range(ndim):
-        step_i = grid_tuple[2][i]
+        step_i = grid.step[i]
         full_cover = (
             full_cover
             & (p0["pstart"][i] == F.col(ccols[i]) * step_i)
@@ -541,44 +456,7 @@ def write_pieces(
         p0["data"].alias("blob"),
         F.length(p0["data"]).cast("long").alias("nbytes"),
     )
-
-    def merge_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grid_s = Slice(*grid_tuple)
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                coord = tuple(int(pdf[c].iloc[i]) for c in ccols)
-                chunk_slice = ck.from_chunk_coordinate(grid_s, coord)
-                layers = pdf["_layers"].iloc[i]
-                if isinstance(layers, (list, np.ndarray)) and len(layers):
-                    slab = _apply_layers(
-                        layers, type_name, chunk_slice, fill
-                    )
-                else:
-                    slab = sb.empty(type_name, chunk_slice, fill)
-                for p in pdf["_ps"].iloc[i]:  # already ord-sorted
-                    pslice = Slice(
-                        tuple(int(x) for x in p["pstart"]),
-                        tuple(int(x) for x in p["pstop"]),
-                        tuple(1 for _ in p["pstart"]),
-                    )
-                    piece = sb.from_bytes(
-                        bytes(p["data"]), type_name, pslice
-                    )
-                    sb.copy_into(piece, slab)
-                blob = sb.to_bytes(slab)
-                out.append(
-                    {
-                        "ckey": _ckey(coord),
-                        **{c: coord[i] for i, c in enumerate(ccols)},
-                        "chunk_hash": ck.generate_id(slab),
-                        "blob": blob,
-                        "nbytes": len(blob),
-                    }
-                )
-            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
-
-    slow = grouped.filter(~is_fast).mapInPandas(merge_batches, out_schema)
+    slow = _merge_chunks(token, var, grouped.filter(~is_fast))
     merged = fast.unionByName(slow)
     merged = merged.persist()
     # per-chunk written boxes (this job's piece extents), JVM-derived
@@ -608,57 +486,68 @@ def write_pieces(
         _maybe_autocompact(conn, token, var, compact_every)
 
 
-def _layered_base_grouped(
-    conn: Connection,
-    var: str,
-    ndim: int,
-    plan: list[tuple[int, int]],
-    touched_ckeys: DataFrame,
-    chunks: DataFrame | None,
-    n_hint: "int | Callable[[], int] | None" = None,
-) -> DataFrame | None:
-    """(ckey, _layers) for every touched chunk: the live index layer
-    stack — generation application order, each with its mask and blob —
-    grouped per coordinate for the merge kernel.  Only the touched
-    ckeys' layers are fetched (semi join before the blob join).  None
-    when there are no layers to attach.  ``n_hint`` may be a callable
-    so an exact-count Spark job is deferred until the early returns
-    have proven a stack exists (r11 ADVICE)."""
-    if not plan or chunks is None:
-        return None
-    if callable(n_hint):
-        n_hint = n_hint()
-    stack = None
-    for i, vg in enumerate(plan):
-        df = conn.gens_df(var, [vg], ndim).select(
-            "ckey", "chunk_hash", "wb"
-        ).withColumn("_lyr", F.lit(i))
-        stack = df if stack is None else stack.unionByName(df)
-    stack = stack.join(touched_ckeys.distinct(), "ckey", "left_semi")
-    blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
-    if n_hint is not None and n_hint * 1024 <= _bcast_budget(conn):
-        # prune the chunk table to the stack's hashes before any blob
-        # bytes move (same streamed-scan discipline as
-        # _touched_base_blobs; n_hint bounds the stack's row count)
-        blob_src = blob_src.join(
-            F.broadcast(stack.select("chunk_hash").distinct()),
-            "chunk_hash",
-            "left_semi",
-        )
-    else:
-        # shuffle_hash: the decompressed-broadcast guard — never let
-        # the planner broadcast the blob side
-        blob_src = blob_src.hint("shuffle_hash")
-    blobbed = stack.join(blob_src, "chunk_hash", "inner")
-    return blobbed.groupBy("ckey").agg(
-        F.collect_list(
-            F.struct(
-                F.col("_lyr").alias("lyr"),
-                F.col("wb").alias("wb"),
-                F.col("blob").alias("blob"),
-            )
-        ).alias("_layers")
+def _merge_chunks(
+    token: Mapping[str, Any], var: str, grouped: DataFrame
+) -> DataFrame:
+    """The merge kernel, one Python pass per chunk: fold the chunk's
+    ``_layers`` through :func:`_apply_layers` (fill when there are
+    none), copy its ``_ps`` pieces on top in ``ord`` order, and
+    content-address the result.  ``grouped`` holds ckey, the coordinate
+    columns, ``_layers`` and, for a write, ``_ps``; without ``_ps`` (the
+    commit-time reconcile) the layers alone merge.  Returns (ckey,
+    coords…, chunk_hash, blob, nbytes)."""
+    ndim = len(md.get_variable_dimensions(token, var))
+    ccols = _coord_cols(ndim)
+    type_name = md.get_type(token, var)
+    fill = md.get_fill(token, var)
+    grid = md.get_chunk_grid_slice(token, var)
+    grid_tuple = (grid.start, grid.stop, grid.step)
+    out_schema = T.StructType(
+        list(index_schema(ndim).fields)
+        + [
+            T.StructField("blob", T.BinaryType(), False),
+            T.StructField("nbytes", T.LongType(), False),
+        ]
     )
+
+    def merge_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        grid_s = Slice(*grid_tuple)
+        for pdf in batches:
+            out = []
+            for i in range(len(pdf)):
+                coord = tuple(int(pdf[c].iloc[i]) for c in ccols)
+                chunk_slice = ck.from_chunk_coordinate(grid_s, coord)
+                layers = pdf["_layers"].iloc[i]
+                if isinstance(layers, (list, np.ndarray)) and len(layers):
+                    slab = _apply_layers(
+                        layers, type_name, chunk_slice, fill
+                    )
+                else:
+                    slab = sb.empty(type_name, chunk_slice, fill)
+                pieces = pdf["_ps"].iloc[i] if "_ps" in pdf else ()
+                for p in pieces:  # already ord-sorted
+                    pslice = Slice(
+                        tuple(int(x) for x in p["pstart"]),
+                        tuple(int(x) for x in p["pstop"]),
+                        tuple(1 for _ in p["pstart"]),
+                    )
+                    piece = sb.from_bytes(
+                        bytes(p["data"]), type_name, pslice
+                    )
+                    sb.copy_into(piece, slab)
+                blob = sb.to_bytes(slab)
+                out.append(
+                    {
+                        "ckey": _ckey(coord),
+                        **{c: coord[k] for k, c in enumerate(ccols)},
+                        "chunk_hash": ck.generate_id(slab),
+                        "blob": blob,
+                        "nbytes": len(blob),
+                    }
+                )
+            yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
+
+    return grouped.mapInPandas(merge_batches, out_schema)
 
 
 def _dedup_by_hash(new_chunks: DataFrame) -> DataFrame:
@@ -778,7 +667,10 @@ def _commit_merged(
     if expected_gen is None:
         expected_gen = (own_gens[-1] + 1) if own_gens else 0
     if index_mode == "full":
-        base_index = _base_index_df(conn, token, var)
+        # the resolved base with version fallback (impl.clj:232-244
+        # precedence + mem.clj:45-49: the parent version itself may
+        # never have written this variable)
+        base_index = conn.plan_df(var, conn.index_plan(vid, var))
         has_base = base_index is not None
     else:
         # delta commits consult only base EXISTENCE (the delta-vs-
@@ -1048,9 +940,13 @@ def reconcile_version(
     here cannot see each other mid-flight (each claims its own delta
     generation), so the winning generation's blob lacks the losing
     writer's cells; its recorded written-boxes (``wb``) say exactly
-    which cells it DID write, and this job folds the contested chunks'
-    layer stacks through :func:`_apply_layers` into merged blobs,
-    committed as one reconciling delta generation.
+    which cells it DID write.  A chunk is contested when its winning
+    row is masked and another layer lies below it; this job attaches
+    the contested chunks' layer stacks with the write path's own
+    attach (:func:`_touched_layers`, every layer of the index plan)
+    and folds them with the write path's merge kernel
+    (:func:`_merge_chunks`, with no pieces), committing the merged
+    blobs as one reconciling delta generation.
 
     Called automatically by ``Connection.finish_version`` (so committed
     versions always resolve wholesale-correct) and by full-mode writes
@@ -1096,107 +992,35 @@ def _reconcile_var(
     vid = token["version-id"]
     ndim = len(md.get_variable_dimensions(token, var))
     ccols = _coord_cols(ndim)
-    type_name = md.get_type(token, var)
-    fill = md.get_fill(token, var)
-    grid = md.get_chunk_grid_slice(token, var)
-    grid_tuple = (grid.start, grid.stop, grid.step)
-
     plan = conn.index_plan(vid, var) or []
-    stack = None
-    for i, vg in enumerate(plan):
-        df = conn.gens_df(var, [vg], ndim).select(
-            "ckey", *ccols, "chunk_hash", "wb"
-        ).withColumn("_lyr", F.lit(i))
-        stack = df if stack is None else stack.unionByName(df)
-    if stack is None:
-        return
-
     # contested ⇔ the WINNING layer is masked and at least one layer
     # sits below it.  A masked row alone over fill is equivalent to its
     # wholesale application (the writer merged onto the empty base it
     # saw), and a wholesale winner above masked rows was itself written
     # through the layer-aware base, so both need no merge.
-    winner = Connection._stack_winner(stack, "_lyr")
-    multi = (
-        stack.groupBy("ckey").count().filter(F.col("count") >= 2)
-    ).select("ckey")
-    contested = (
-        winner.filter(F.col("wb").isNotNull())
-        .select("ckey")
-        .join(multi, "ckey", "left_semi")
-    )
-    chunks = conn.chunks_df()
-    n_contested = 0 if chunks is None else contested.count()
-    if chunks is None or n_contested == 0:
-        for g in masked_gens:
-            conn.fs.rmtree(
-                os.path.join(conn.index_path(vid, var, g), "_MASKED")
-            )
-        return
-
-    sub = stack.join(contested, "ckey", "left_semi")
-    blob_src = chunks.select(F.col("hash").alias("chunk_hash"), "blob")
-    if n_contested * len(plan) * 1024 <= _bcast_budget(conn):
-        # stream the chunk table, move only the contested layers' blobs
-        # (same discipline as _touched_base_blobs; the full count above
-        # replaced a limit(1) probe — same job class, and it sizes this
-        # choice)
-        blob_src = blob_src.join(
-            F.broadcast(sub.select("chunk_hash").distinct()),
-            "chunk_hash",
-            "left_semi",
+    n_contested = 0
+    if plan and conn.chunks_df() is not None:
+        top = conn.gens_df(var, plan, ndim).groupBy("ckey").agg(
+            F.max_by(F.struct(*ccols, "wb"), F.struct("v", "g")).alias("_w"),
+            F.count(F.lit(1)).alias("_n"),
         )
-    else:
-        blob_src = blob_src.hint("shuffle_hash")
-    blobbed = sub.join(blob_src, "chunk_hash", "inner")
-    grouped = blobbed.groupBy("ckey", *ccols).agg(
-        F.collect_list(
-            F.struct(
-                F.col("_lyr").alias("lyr"),
-                F.col("wb").alias("wb"),
-                F.col("blob").alias("blob"),
-            )
-        ).alias("_layers")
-    )
-
-    out_schema = T.StructType(
-        list(index_schema(ndim).fields)
-        + [
-            T.StructField("blob", T.BinaryType(), False),
-            T.StructField("nbytes", T.LongType(), False),
-        ]
-    )
-
-    def merge_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        grid_s = Slice(*grid_tuple)
-        for pdf in batches:
-            out = []
-            for i in range(len(pdf)):
-                coord = tuple(int(pdf[c].iloc[i]) for c in ccols)
-                chunk_slice = ck.from_chunk_coordinate(grid_s, coord)
-                slab = _apply_layers(
-                    pdf["_layers"].iloc[i], type_name, chunk_slice, fill
-                )
-                blob = sb.to_bytes(slab)
-                out.append(
-                    {
-                        "ckey": _ckey(coord),
-                        **{c: coord[k] for k, c in enumerate(ccols)},
-                        "chunk_hash": ck.generate_id(slab),
-                        "blob": blob,
-                        "nbytes": len(blob),
-                    }
-                )
-            yield pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields]
-            )
-
-    merged = grouped.mapInPandas(merge_rows, out_schema).persist()
-    try:
-        _commit_merged(conn, token, var, merged, "delta")
-    finally:
-        merged.unpersist()
-        conn.invalidate_cache()
+        contested = top.filter(
+            F.col("_w.wb").isNotNull() & (F.col("_n") >= 2)
+        ).select("ckey", *[F.col(f"_w.{c}").alias(c) for c in ccols])
+        n_contested = contested.count()
+    if n_contested:
+        layers = _touched_layers(
+            conn, var, ndim, plan, contested.select("ckey"),
+            lambda: n_contested, True,
+        )
+        merged = _merge_chunks(
+            token, var, contested.join(layers, "ckey")
+        ).persist()
+        try:
+            _commit_merged(conn, token, var, merged, "delta")
+        finally:
+            merged.unpersist()
+            conn.invalidate_cache()
     # markers drop only AFTER the reconciling generation is readable:
     # a crash in between re-runs the (idempotent) reconcile
     for g in masked_gens:
@@ -1439,17 +1263,9 @@ def ingest_aligned(
     ccols = _coord_cols(ndim)
     grid = md.get_chunk_grid_slice(token, var)
     if index_mode == "full":
-        vid = token["version-id"]
-        if any(
-            _gen_masked(conn, v, var, g)
-            for v, g in (conn.index_plan(vid, var) or [])
-        ):
-            # same guard as write_pieces: a full-mode carry over
-            # unreconciled cross-writer masks would resolve the
-            # contested coords wholesale and drop the losing writer's
-            # cells (the aligned blobs themselves are base-independent,
-            # but the CARRY is not)
-            reconcile_version(conn, token, variables=[var])
+        # the aligned blobs are base-independent, but a full-mode CARRY
+        # over masked state is not: reconcile it first
+        _write_base(conn, token, var, index_mode)
 
     full_cover = F.lit(True)
     for i in range(ndim):

@@ -3,8 +3,11 @@ limits, not just host MemAvailable (VERDICT r7 #3)."""
 
 from __future__ import annotations
 
+import os
+
 from mandoline_spark.sources.session import (
     _cgroup_limit_gb,
+    _default_cpus,
     _default_driver_mem,
 )
 
@@ -48,3 +51,13 @@ def test_cgroup_uncapped_sentinels(tmp_path):
     assert _cgroup_limit_gb((str(tmp_path / "missing"),)) is None
     v2.write_text(f"{16 << 30}\n")
     assert _cgroup_limit_gb((str(v2),)) == 16
+
+
+def test_default_cpus_follow_host_affinity(monkeypatch):
+    """Without ``SPARK_GRAFT_CPUS`` the core count is the process's
+    affinity mask, not a fixed 32; the variable still overrides."""
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert _default_cpus() == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "7")
+    assert _default_cpus() == "7"

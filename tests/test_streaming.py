@@ -794,3 +794,133 @@ def test_replay_workspace_lifecycle(tmp_path, monkeypatch):
         import shutil
 
         shutil.rmtree(created, ignore_errors=True)
+
+
+def _dead_pid() -> str:
+    import subprocess
+
+    return subprocess.run(
+        ["python", "-c", "import os; print(os.getpid())"],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+
+
+def test_replay_workspace_recycled_pid_is_dead(tmp_path, monkeypatch):
+    """A replay dir whose owner pid now names a DIFFERENT process (same
+    pid, later start time) is pruned; the stamp of a created dir carries
+    the process start time."""
+    import os
+    import shutil
+    import tempfile
+
+    from mandoline_spark import queries as Q
+
+    me = Q._proc_start(os.getpid())
+    if me is None:
+        pytest.skip("no /proc/<pid>/stat on this platform")
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    recycled = tmp_path / "mandoline_q106_recycled"
+    recycled.mkdir()
+    (recycled / "owner.pid").write_text(str(os.getpid()))
+    (recycled / "owner.start").write_text(str(int(me) - 1))
+    live = tmp_path / "mandoline_q107_live"
+    live.mkdir()
+    (live / "owner.pid").write_text(str(os.getpid()))
+    (live / "owner.start").write_text(me)
+
+    created = Q._replay_workspace("mandoline_q106_")
+    try:
+        assert not recycled.exists(), "recycled-pid dir must be pruned"
+        assert live.exists(), "same pid + same start time is alive"
+        with open(os.path.join(created, "owner.start")) as f:
+            assert f.read() == me
+    finally:
+        shutil.rmtree(created, ignore_errors=True)
+
+
+def test_replay_memo_key_survives_id_reuse():
+    """The memo key of a session is never handed to another session,
+    even when the collected session's id() is recycled."""
+    import gc
+
+    from mandoline_spark import queries as Q
+
+    class _Sess:
+        pass
+
+    a = _Sess()
+    ka = Q._session_key(a)
+    del a
+    gc.collect()
+    b = _Sess()  # CPython typically reuses a's address here
+    kb = Q._session_key(b)
+    assert kb != ka
+    assert Q._session_key(b) == kb  # stable for the session's life
+
+
+def test_replay_result_with_missing_sink_is_a_miss(spark, tmp_path):
+    """A memo entry whose sink dir is gone is dropped and reads as a
+    miss (the caller replays) instead of failing the scan."""
+    import shutil
+    import weakref
+
+    from mandoline_spark import queries as Q
+
+    out = str(tmp_path / "out")
+    spark.range(3).write.parquet(out)
+    key = (Q._session_key(spark), "__missing_sink_test__")
+    Q._Q106_MEMO[key] = {
+        "out": out,
+        "schema": spark.range(0).schema,
+        "tmp": str(tmp_path),
+        "spark_ref": weakref.ref(spark),
+    }
+    try:
+        assert Q._replay_result(spark, key).count() == 3
+        shutil.rmtree(out)
+        assert Q._replay_result(spark, key) is None
+        assert key not in Q._Q106_MEMO
+    finally:
+        Q._Q106_MEMO.pop(key, None)
+
+
+def test_replay_workspace_lists_temp_root_once_per_session(
+    tmp_path, monkeypatch
+):
+    """Dead-owner pruning lists the temp root once per session, not on
+    every replay; the next session prunes what appeared since."""
+    import os
+    import shutil
+    import tempfile
+
+    from mandoline_spark import queries as Q
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    listed = []
+    real_listdir = os.listdir
+
+    def counting(path="."):
+        if str(path) == str(tmp_path):
+            listed.append(path)
+        return real_listdir(path)
+
+    monkeypatch.setattr(os, "listdir", counting)
+
+    class _Sess:
+        pass
+
+    s1, s2 = _Sess(), _Sess()
+    made = [Q._replay_workspace("mandoline_q106_", s1)]
+    stale = tmp_path / "mandoline_q108_stale"
+    stale.mkdir()
+    (stale / "owner.pid").write_text(_dead_pid())
+    try:
+        made.append(Q._replay_workspace("mandoline_q107_", s1))
+        assert len(listed) == 1
+        assert stale.exists()
+        made.append(Q._replay_workspace("mandoline_q109_", s2))
+        assert len(listed) == 2
+        assert not stale.exists()
+    finally:
+        for d in made:
+            shutil.rmtree(d, ignore_errors=True)
